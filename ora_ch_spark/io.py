@@ -33,51 +33,45 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 def local_df(spark: SparkSession, rows, schema) -> DataFrame:
     """Small driver-side row set as a single-task DataFrame.
 
-    r15 (guide §4 — eliminate the Python boundary): Arrow
-    ``createDataFrame(pandas)`` builds a pure-JVM **LocalRelation**
-    (plans as ``LocalTableScan``), so downstream jobs never spawn a
-    Python worker to re-unpickle the rows — the previous
-    ``parallelize(rows, 1)`` form paid that round trip on EVERY
-    action touching the frame (measured 0.175 → 0.056 s per noop on
-    an 8-row frame; ~10 operators consume such frames 1-3× each).
-    Broadcasts of a LocalRelation build driver-side without a
-    separate job. ``dtype=object`` keeps ``None`` out of pandas'
-    NaN-coercion for numeric columns; ``coalesce(1)`` pins writes to
-    one task / one file (the JVM-only coalesce is free — the ~5 s
-    coalesce pathology documented in earlier rounds was specific to
-    coalescing a *Python-RDD-backed* relation). Arrow fallback is
-    DISABLED for the conversion so anything Arrow can't convert
-    raises and lands in the explicit one-slice parallelize fallback
-    (the silent non-Arrow pandas path would re-slice
-    defaultParallelism ways). Use for bounded tables only (centroid
-    sets, quantizer codebooks, report rows).
+    The rows go to the JVM as a ``pyarrow.Table``, and
+    ``createDataFrame(table, schema)`` builds a pure-JVM
+    **LocalRelation** (plans as ``LocalTableScan``), so downstream jobs
+    never spawn a Python worker to re-unpickle the rows. The previous
+    ``parallelize(rows, 1)`` form paid that round trip on EVERY action
+    touching the frame (measured 0.175 → 0.056 s per noop on an 8-row
+    frame; ~10 operators consume such frames 1-3× each). Broadcasts of
+    a LocalRelation build driver-side without a separate job.
+    ``coalesce(1)`` pins writes to one task / one file (the JVM-only
+    coalesce is free — the ~5 s coalesce pathology documented in
+    earlier rounds was specific to coalescing a *Python-RDD-backed*
+    relation). The Arrow-table path never consults
+    ``spark.sql.execution.arrow.pyspark.fallback.enabled``, so no
+    session conf is touched and concurrent callers cannot race on it;
+    anything Arrow can't convert raises and lands in the explicit
+    one-slice parallelize fallback. Use for bounded tables only
+    (centroid sets, quantizer codebooks, report rows).
 
-    Classic-deployment note (r14 advice): the fallback path touches
+    Classic-deployment note: the fallback path touches
     ``spark.sparkContext``, which Spark Connect does not expose — on
     Connect the Arrow path (session-level API only) is the one that
-    runs; the fallback would raise. Fine for the current classic
-    deployment; a Connect port would swap the fallback for
-    ``createDataFrame(rows, schema)`` and accept the slicing."""
+    runs; the fallback would raise. A Connect port would swap the
+    fallback for ``createDataFrame(rows, schema)`` and accept the
+    slicing."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    rows = list(rows)
     try:
-        import pandas as pd
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
 
-        if hasattr(schema, "fieldNames"):
-            names = schema.fieldNames()
-        else:
-            from pyspark.sql.types import _parse_datatype_string
-
-            names = [f.name for f in _parse_datatype_string(schema).fields]
-        pdf = pd.DataFrame(list(rows), columns=names, dtype=object)
-        fb_key = "spark.sql.execution.arrow.pyspark.fallback.enabled"
-        prev = spark.conf.get(fb_key, None)
-        spark.conf.set(fb_key, "false")
-        try:
-            return spark.createDataFrame(pdf, schema).coalesce(1)
-        finally:
-            if prev is None:
-                spark.conf.unset(fb_key)
-            else:
-                spark.conf.set(fb_key, prev)
+        arrow = to_arrow_schema(schema)
+        cols = list(zip(*rows)) if rows else [()] * len(arrow)
+        table = pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+        )
+        return spark.createDataFrame(table, schema).coalesce(1)
     except Exception:  # noqa: BLE001 — any conversion gap
         return spark.createDataFrame(
             spark.sparkContext.parallelize(rows, 1), schema

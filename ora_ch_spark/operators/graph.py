@@ -9,10 +9,13 @@ PageRank here — in the same design language:
   integer sum — order-independent, so the DuckDB oracle replays the
   exact trajectory (double-accumulation PageRank would drift by
   partition order and could never be value-gated).
-- **Bounded-iteration DataFrame loop** with ``localCheckpoint`` per
-  round: each iteration is one shuffle on the destination key (the
-  standard message-passing plan); lineage truncation prevents the
-  exponential-plan trap the star-CC work documented.
+- **Bounded-iteration DataFrame loop** run as ONE action: each
+  iteration is one shuffle on the destination key (the standard
+  message-passing plan), the rounds nest into one lineage, and a single
+  eager ``localCheckpoint`` after the loop executes them together. For
+  ``iters > 10`` the loop also checkpoints every 10 rounds, so the plan
+  stays bounded (the exponential-plan trap the star-CC work documented
+  does not apply, but analysis cost still grows with depth).
 - **Scale shape**: edges are the big relation and are persisted once;
   ranks are one row per node. Each round = edges ⋈ ranks (broadcast
   when nodes fit, shuffle otherwise — Spark's AQE picks) → partial-agg
@@ -27,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SCALE = 1_000_000_000  # rank fixed-point: 1e9 == 1.0
+CHECKPOINT_EVERY = 10  # lineage truncation period; iters <= 10 never truncates
 
 
 def pagerank(
@@ -71,19 +75,14 @@ def pagerank(
             .groupBy("dst")
             .agg(F.sum("c").alias("s"))
         )
-        # NO per-round checkpoint (r15, guide §1.2 #1 / §2.4): the
-        # loop is bounded with no convergence probe, so nothing needs
-        # to run per round — the rounds nest into ONE lineage (depth
-        # grows linearly in `iters`: one join+agg+join per round, no
-        # self-referencing blowup like star-CC's) and the single
-        # eager checkpoint after the loop executes them all as one
-        # fused query. Per-round checkpoints paid a driver-sequenced
-        # job cycle each — eager measured 24 jobs / 5.65 s, and even
-        # lazy localCheckpoint still ran the rounds at call time (AQE
-        # finalizes its stages when the plan compiles to an RDD:
-        # 22 jobs). Callers that need very large `iters` should
-        # truncate every ~10 rounds; at the catalog's bounded depths
-        # the fused plan is strictly cheaper.
+        # NO per-round checkpoint at the catalog's depths: the rounds
+        # nest into ONE lineage (one join+agg+join per round, no
+        # self-referencing blowup like star-CC's) and the eager
+        # checkpoint after the loop runs them as one fused query.
+        # Per-round checkpoints paid a driver-sequenced job cycle each
+        # (eager: 24 jobs / 5.65 s; lazy localCheckpoint still ran the
+        # rounds at call time, 22 jobs). Deep loops truncate lineage
+        # every CHECKPOINT_EVERY rounds so plan analysis stays bounded.
         ranks = nodes.join(contrib, nodes.node == contrib.dst, "left").select(
             "node",
             (
@@ -91,6 +90,8 @@ def pagerank(
                 + F.expr(f"{damping_pct} * coalesce(s, 0L) div 100")
             ).alias("rank"),
         )
+        if (it + 1) % CHECKPOINT_EVERY == 0 and it + 1 < iters:
+            ranks = ranks.localCheckpoint(eager=True)
     # ONE action materializes the whole loop; the checkpoint blocks
     # then back the returned frame without the persisted inputs
     ranks = ranks.localCheckpoint(eager=True)

@@ -2145,6 +2145,24 @@ def test_pagerank_integer_trajectory(spark):
         pagerank(edges, iters=0)
 
 
+def test_pagerank_deep_loop_matches_integer_replay(spark):
+    """iters=12 crosses the every-10-rounds lineage checkpoint; the
+    ranks must still equal a pure-Python integer replay."""
+    from ora_ch_spark.operators.graph import SCALE, pagerank
+
+    edges = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 1), (5, 3)]
+    got = pagerank(spark.createDataFrame(edges, "src bigint, dst bigint"), iters=12)
+    nodes = {n for e in edges for n in e}
+    outdeg = {s: sum(1 for e in edges if e[0] == s) for s, _ in edges}
+    ranks = dict.fromkeys(nodes, SCALE)
+    for _ in range(12):
+        sums = dict.fromkeys(nodes, 0)
+        for s, d in edges:
+            sums[d] += ranks[s] // outdeg[s]
+        ranks = {v: 15 * SCALE // 100 + 85 * sums[v] // 100 for v in nodes}
+    assert {r["node"]: r["rank"] for r in got.collect()} == ranks
+
+
 def test_dialect_sample_clause():
     from ora_ch_spark.functions.dialect import translate_ch_sql as T
 

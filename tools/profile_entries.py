@@ -2,6 +2,9 @@
 """Per-entry wall profile (guide §1): for each named entry, time the
 construction phase (eager store/index work inside q.spark()) and the
 noop-sink execution of the returned frame separately, min-of-N each.
+Next to the entry's Spark job count it reports its Janino compiles and
+compile milliseconds: a warm pass that still compiles is recompiling
+classes the codegen cache evicted.
 
 Usage: python tools/profile_entries.py [-n N] name1 name2 ...
        python tools/profile_entries.py --top K   # K slowest from BENCH.json
@@ -18,7 +21,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from ora_ch_spark.catalog import all_queries  # noqa: E402
-from ora_ch_spark.session import get_spark  # noqa: E402
+from ora_ch_spark.session import compile_stats, get_spark  # noqa: E402
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -60,11 +63,13 @@ def main() -> None:
             # high count with construct-dominated wall
             group = f"profile:{nm}:{time.monotonic_ns()}"
             spark.sparkContext.setJobGroup(group, nm)
+            c0, ms0 = compile_stats(spark)
             t0 = time.perf_counter()
             df = q.spark(spark, sf_dir)
             t1 = time.perf_counter()
             df.write.format("noop").mode("overwrite").save()
             t2 = time.perf_counter()
+            c1, ms1 = compile_stats(spark)
             try:
                 n_jobs = len(
                     spark.sparkContext.statusTracker().getJobIdsForGroup(group)
@@ -72,13 +77,14 @@ def main() -> None:
             except Exception:  # noqa: BLE001 — diagnostics only
                 n_jobs = -1
             spark.sparkContext.setJobGroup(None, None)
-            cur = (t1 - t0, t2 - t1, t2 - t0, n_jobs)
+            cur = (t1 - t0, t2 - t1, t2 - t0, n_jobs, c1 - c0, ms1 - ms0)
             if best is None or cur[2] < best[2]:
                 best = cur
         out[nm] = best
         print(
             f"{nm}: total {best[2]:.2f}s = construct {best[0]:.2f}s"
-            f" + exec {best[1]:.2f}s  [{best[3]} jobs]"
+            f" + exec {best[1]:.2f}s  [{best[3]} jobs,"
+            f" {best[4]} compiles / {best[5]:.0f} ms]"
         )
     print(json.dumps({k: [round(x, 3) for x in v] for k, v in out.items()}))
 
