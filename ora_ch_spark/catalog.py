@@ -32,6 +32,7 @@ from pyspark.sql import Window as W
 from ora_ch_spark.io import load_table, register_views
 from ora_ch_spark.plans.calc import CalcEngine
 from ora_ch_spark.plans.scheduler import TaskScheduler
+from ora_ch_spark.session import session_memo
 from ora_ch_spark.specs import (
     CalcQuery,
     Operation,
@@ -1323,40 +1324,35 @@ def _v6184_view_body() -> str:
     return txt[m.end():].rstrip().rstrip(";")
 
 
-# last (session, sf_dir) the fixture views were created for — the 13
-# CREATE OR REPLACE VIEW statements cost ~1.7 s per call even warm
-# (catalog writes), which dominated repeated verbatim-entry runs;
-# views are deterministic per (session, sf_dir), so re-creation is
-# pure waste. The session is held by OBJECT and compared with ``is``:
-# the views live in a session's in-memory catalog, so a fresh session
-# (same sf_dir) must re-create them or the verbatim query fails with
-# TABLE_OR_VIEW_NOT_FOUND.
-_V6184_VIEWS_STATE: dict[str, object | None] = {
-    "spark": None, "sf_dir": None,
-}
-
-
-def _v6184_create_fixture_views(spark: SparkSession, sf_dir: str) -> None:
+def _v6184_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Create the production-named fixture views (metadata only, no
-    data copied) so the verbatim text's qualified references resolve.
-    Shared by the gated entry and the CalcEngine e2e test. Memoized
-    per (session, sf_dir) — switching either recreates."""
-    if (
-        _V6184_VIEWS_STATE["spark"] is spark
-        and _V6184_VIEWS_STATE["sf_dir"] == sf_dir
-    ):
-        return
-    for (db, tbl), sel in _V6184_FIXTURES.items():
-        spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
-        body = sel.format(
-            L=f"parquet.`{sf_dir}/lineitem.parquet`",
-            O=f"parquet.`{sf_dir}/orders.parquet`",
-        )
-        spark.sql(f"CREATE OR REPLACE VIEW {db}.{tbl} AS {body}")
-    _V6184_VIEWS_STATE["spark"] = spark
-    _V6184_VIEWS_STATE["sf_dir"] = sf_dir
-    # view set changed → any memoized analyzed frame is stale
-    _V6184_VIEWS_STATE["base_df"] = None
+    data copied) so the verbatim text's qualified references resolve,
+    and return the verbatim query's ANALYZED base frame. Shared by the
+    gated entry and the CalcEngine e2e test.
+
+    Memoized per (session, sf_dir) with ``session.session_memo``: the
+    13 CREATE OR REPLACE VIEW statements cost ~1.7 s even warm, and the
+    bind → translate → Catalyst analysis of the 156-line text another
+    ~1.7 s, for identical results. The views live in the session's
+    catalog, so a fresh session rebuilds; switching sf_dir recreates
+    the views and re-analyzes in one step. The memo holds a LAZY
+    logical plan — every action still executes the full join DAG
+    from the parquet inputs."""
+    from ora_ch_spark.functions.dialect import translate_ch_sql
+    from ora_ch_spark.functions.params import bind_params
+
+    def build() -> DataFrame:
+        for (db, tbl), sel in _V6184_FIXTURES.items():
+            spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
+            body = sel.format(
+                L=f"parquet.`{sf_dir}/lineitem.parquet`",
+                O=f"parquet.`{sf_dir}/orders.parquet`",
+            )
+            spark.sql(f"CREATE OR REPLACE VIEW {db}.{tbl} AS {body}")
+        bound = bind_params(_v6184_view_body(), _V6184_PARAMS, _V6184_VALUES)
+        return spark.sql(translate_ch_sql(bound))
+
+    return session_memo(spark, ("v6184", sf_dir), build)
 
 
 def calc_verbatim_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1370,26 +1366,7 @@ def calc_verbatim_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``toFixedString(x, 1000)`` translates to a plain string cast, so
     the ``dk.s_code IN (…)`` membership test compares unpadded
     strings (CH FixedString NUL-padding has no Spark analogue)."""
-    from ora_ch_spark.functions.dialect import translate_ch_sql
-    from ora_ch_spark.functions.params import bind_params
-
-    _v6184_create_fixture_views(spark, sf_dir)
-    # memoize the ANALYZED base frame per (session, sf_dir) — same
-    # contract as the fixture-view memo above (r15, guide §1.2): the
-    # bind → translate → Catalyst analysis of the 156-line text is a
-    # deterministic pure function of committed inputs and measured
-    # ~1.7 s per call warm (0.5 s regex translate + 1.2 s resolving
-    # the 13 fixture views). The memo holds a LAZY logical plan —
-    # no rows are computed or cached; every action still executes
-    # the full join DAG from the parquet inputs.
-    if (
-        _V6184_VIEWS_STATE.get("base_df") is None
-        or _V6184_VIEWS_STATE["spark"] is not spark
-        or _V6184_VIEWS_STATE["sf_dir"] != sf_dir
-    ):
-        bound = bind_params(_v6184_view_body(), _V6184_PARAMS, _V6184_VALUES)
-        _V6184_VIEWS_STATE["base_df"] = spark.sql(translate_ch_sql(bound))
-    out = _V6184_VIEWS_STATE["base_df"]
+    out = _v6184_fixture(spark, sf_dir)
     # total output order: fp_id is NOT unique ((l_orderkey,
     # l_linenumber) has duplicate pairs in the synthetic data — see
     # the verify-skill gotcha), so order over EVERY column;

@@ -15,6 +15,7 @@ from ora_ch_spark.operators import dedup as D
 from ora_ch_spark.operators import similarity as S
 from ora_ch_spark.operators import text as TX
 from ora_ch_spark.operators.multimodal import media_feature_pipeline
+from ora_ch_spark.session import overlap
 from ora_ch_spark.streaming.watermark import streaming_hourly_rollup
 
 # ---------------------------------------------------------------------------
@@ -2748,50 +2749,44 @@ def sim_recall_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # broadcast it driver-side instead of each launching a broadcast
     # build over the persisted frame, and `total` is its length (r15,
     # guide §5: the per-method probe cost is all that remains)
-    from concurrent.futures import ThreadPoolExecutor
-
     from ora_ch_spark.io import local_df
 
     idt = dict(emb.dtypes)["vec_id"]
     # the per-method construction phases each run eager driver
     # actions (training collects, per-dim stats, seed/plane builds) —
-    # all INDEPENDENT given the cached corpus, so overlap them from a
-    # small thread pool (guide §2.6: FAIR scheduler is on; actions
-    # are only sequential because the driver calls them sequentially).
-    # pq and ivfadc share the identical training trajectory — run it
-    # once and fan both out after it resolves.
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        exact_rows_f = pool.submit(
-            lambda: S.cosine_topk_bruteforce(emb, query_ids=queries)
-            .select("q_id", "n_id")
-            .collect()
+    # all INDEPENDENT given the cached corpus, so overlap them 4 at a
+    # time (guide §2.6: FAIR scheduler is on; actions are only
+    # sequential because one thread calls them in turn). pq and
+    # ivfadc share the identical training trajectory — one thunk runs
+    # it once and then overlaps both.
+    def trained_pair():
+        trained = pq_train(emb, query_ids=queries)
+        return overlap(
+            spark,
+            lambda: ivfadc_topk(emb, query_ids=queries, trained=trained),
+            lambda: pq_topk(emb, query_ids=queries, trained=trained),
         )
-        trained_f = pool.submit(lambda: pq_train(emb, query_ids=queries))
-        futs = {
-            "ivf": pool.submit(lambda: S.ivf_topk(emb, query_ids=queries)),
-            "lsh": pool.submit(
-                lambda: S.cosine_topk_lsh_multiprobe(
-                    emb, query_ids=queries, n_planes=_N_PLANES,
-                    dims=_DIMS, n_probes=1,
-                )
-            ),
-            "lsh_multiprobe": pool.submit(
-                lambda: S.cosine_topk_lsh_multiprobe(
-                    emb, query_ids=queries, n_planes=_N_PLANES,
-                    dims=_DIMS, n_probes=2,
-                )
-            ),
-            "sq8": pool.submit(lambda: sq8_topk(emb, query_ids=queries)),
-        }
-        trained = trained_f.result()
-        futs["ivfadc"] = pool.submit(
-            lambda: ivfadc_topk(emb, query_ids=queries, trained=trained)
-        )
-        futs["pq"] = pool.submit(
-            lambda: pq_topk(emb, query_ids=queries, trained=trained)
-        )
-        exact_rows = exact_rows_f.result()
-        methods = {name: f.result() for name, f in futs.items()}
+
+    exact_rows, (ivfadc, pq), ivf, lsh, lsh_mp, sq8 = overlap(
+        spark,
+        lambda: S.cosine_topk_bruteforce(emb, query_ids=queries)
+        .select("q_id", "n_id")
+        .collect(),
+        trained_pair,
+        lambda: S.ivf_topk(emb, query_ids=queries),
+        lambda: S.cosine_topk_lsh_multiprobe(
+            emb, query_ids=queries, n_planes=_N_PLANES, dims=_DIMS, n_probes=1,
+        ),
+        lambda: S.cosine_topk_lsh_multiprobe(
+            emb, query_ids=queries, n_planes=_N_PLANES, dims=_DIMS, n_probes=2,
+        ),
+        lambda: sq8_topk(emb, query_ids=queries),
+        workers=4,
+    )
+    methods = {
+        "ivf": ivf, "lsh": lsh, "lsh_multiprobe": lsh_mp, "sq8": sq8,
+        "ivfadc": ivfadc, "pq": pq,
+    }
     exact = local_df(spark, exact_rows, f"q_id {idt}, n_id {idt}")
     per_method = [
         df.select("q_id", "n_id")
@@ -2852,54 +2847,46 @@ def sim_recall_rerank_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb.count()  # single cache fill before the thread fan-out
     # exact baseline as a collected LocalRelation — same rationale as
     # sim_recall_report (|Q|·k = 50 rows by construction); the
-    # independent eager build phases overlap from a thread pool
-    # (guide §2.6), same structure as sim_recall_report
-    from concurrent.futures import ThreadPoolExecutor
-
+    # independent eager build phases overlap 4 at a time (guide §2.6),
+    # same structure as sim_recall_report
     from ora_ch_spark.io import local_df
 
     idt = dict(emb.dtypes)["vec_id"]
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        exact_rows_f = pool.submit(
-            lambda: S.cosine_topk_bruteforce(emb, query_ids=queries)
-            .select("q_id", "n_id")
-            .collect()
-        )
-        trained_f = pool.submit(  # shared: pq + ivfadc
-            lambda: pq_train(emb, query_ids=queries)
-        )
-        futs = {
-            # routing x SQ8 needs NO refine stage — near-exact per-dim
-            # decode under the same 2-probe routing; its presence here
-            # is the control showing WHERE the other paths' recall went
-            "ivf_sq8": pool.submit(
-                lambda: ivf_sq8_topk(emb, query_ids=queries)
-            ),
-            "lsh_multiprobe_wide": pool.submit(
-                lambda: S.cosine_topk_lsh_multiprobe(
-                    emb,
-                    query_ids=queries,
-                    n_planes=_N_PLANES,
-                    dims=_DIMS,
-                    n_probes=_MP_WIDE_PROBES,
-                )
-            ),
-        }
-        trained = trained_f.result()
-        futs["ivfadc_rerank"] = pool.submit(
+
+    def trained_pair():  # shared training: pq + ivfadc
+        trained = pq_train(emb, query_ids=queries)
+        return overlap(
+            spark,
             lambda: ivfadc_topk(
-                emb, query_ids=queries, rerank=_IVFADC_RERANK_R,
-                trained=trained,
-            )
-        )
-        futs["pq_rerank"] = pool.submit(
+                emb, query_ids=queries, rerank=_IVFADC_RERANK_R, trained=trained,
+            ),
             lambda: pq_topk(
-                emb, query_ids=queries, rerank=_PQ_RERANK_R,
-                trained=trained,
-            )
+                emb, query_ids=queries, rerank=_PQ_RERANK_R, trained=trained,
+            ),
         )
-        exact_rows = exact_rows_f.result()
-        methods = {name: f.result() for name, f in futs.items()}
+
+    exact_rows, (ivfadc, pq), ivf_sq8, lsh_wide = overlap(
+        spark,
+        lambda: S.cosine_topk_bruteforce(emb, query_ids=queries)
+        .select("q_id", "n_id")
+        .collect(),
+        trained_pair,
+        # routing x SQ8 needs NO refine stage — near-exact per-dim
+        # decode under the same 2-probe routing; its presence here
+        # is the control showing WHERE the other paths' recall went
+        lambda: ivf_sq8_topk(emb, query_ids=queries),
+        lambda: S.cosine_topk_lsh_multiprobe(
+            emb, query_ids=queries, n_planes=_N_PLANES, dims=_DIMS,
+            n_probes=_MP_WIDE_PROBES,
+        ),
+        workers=4,
+    )
+    methods = {
+        "ivf_sq8": ivf_sq8,
+        "lsh_multiprobe_wide": lsh_wide,
+        "ivfadc_rerank": ivfadc,
+        "pq_rerank": pq,
+    }
     exact = local_df(spark, exact_rows, f"q_id {idt}, n_id {idt}")
     per_method = [
         df.select("q_id", "n_id")

@@ -14,6 +14,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ora_ch_spark.session import session_memo
+
 TABLES = (
     "region",
     "nation",
@@ -83,38 +85,22 @@ def normalize_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     how the parquet writer encoded it. The testdata has shipped `ts` as
     both TIMESTAMP(NANOS) (reads as bigint under nanosAsLong) and
     timestamp[us] without UTC adjustment (reads as TIMESTAMP_NTZ in
-    Spark 4). With the session pinned to UTC, both conversions preserve
-    wall-clock values and match the DuckDB oracle's naive TIMESTAMP."""
+    Spark 4). The session is pinned to UTC (``session.SESSION_INVARIANTS``),
+    so both conversions preserve wall-clock values and match the DuckDB
+    oracle's naive TIMESTAMP."""
     dt = dict(df.dtypes).get(col)
     if dt == "bigint":  # legacy nanos-as-long: floor ns → µs
         df = df.withColumn(col, F.timestamp_micros(F.expr(f"{col} div 1000")))
     elif dt == "timestamp_ntz":
-        # NTZ → TZ interprets the wall clock in the SESSION timezone —
-        # pin UTC here (same documented side effect as load_table) so
-        # the conversion is wall-clock-stable even when a caller feeds
-        # a raw frame into an operator without going through load_table
-        df.sparkSession.conf.set("spark.sql.session.timeZone", "UTC")
         df = df.withColumn(col, F.col(col).cast("timestamp"))
     return df
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one test table.
-
-    DELIBERATE session-conf side effects (documented contract): pins
-    ``spark.sql.session.timeZone=UTC`` (year()/date_trunc()/timestamp
-    literals must match the UTC-naive DuckDB oracle on whatever
-    session the driver brings), and — for ``events`` — leaves
-    ``nanosAsLong`` enabled session-wide (any later nanos-timestamp
-    parquet reads in the same session surface as bigint; acceptable
-    here because the engine funnels every read through this loader)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    """Load one test table. ``events.ts`` is read through
+    :func:`normalize_ts`, which relies on the session invariants."""
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
-        # events.ts is parquet TIMESTAMP(NANOS), which Spark's vectorized
-        # reader rejects; read it as long nanos and floor-convert to a
-        # microsecond timestamp (matching DuckDB's ns→µs truncation).
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         return normalize_ts(spark.read.parquet(path))
     return spark.read.parquet(path)
 
@@ -123,40 +109,20 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: load_table(spark, sf_dir, t) for t in TABLES}
 
 
-# last (session, sf_dir) the table views were registered for —
-# dozens of catalog entries call register_views per invocation, and
-# the schema-inference + re-registration round trip costs ~0.8 s each
-# time for identical results. The session is held by OBJECT (identity
-# compared with ``is``), not by id(): a stopped session's id can be
-# reused by CPython for the next one, which would turn a fresh
-# session into a false cache hit with views registered nowhere.
-_REGISTER_STATE: dict[str, object | None] = {
-    "spark": None, "sf_dir": None, "dfs": None,
-}
-
-
 def register_views(
     spark: SparkSession, sf_dir: str, force: bool = False
 ) -> dict[str, DataFrame]:
     """Register every test table as a temp view (for the SQL
-    surface). Memoized per (session, sf_dir) — nothing in the engine
-    overwrites these view names, so re-registration is pure waste;
-    ``force=True`` re-registers (e.g. after an external view drop).
-    A memo hit still re-pins load_table's documented session confs
-    (UTC timeZone, nanosAsLong) so the per-call contract holds even
-    when a driver mutated the session between catalog queries."""
-    if (
-        not force
-        and _REGISTER_STATE["spark"] is spark
-        and _REGISTER_STATE["sf_dir"] == sf_dir
-    ):
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return _REGISTER_STATE["dfs"]
-    dfs = load_tables(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    _REGISTER_STATE["spark"] = spark
-    _REGISTER_STATE["sf_dir"] = sf_dir
-    _REGISTER_STATE["dfs"] = dfs
-    return dfs
+    surface). Dozens of catalog entries call this per invocation and
+    the schema inference costs ~0.8 s each time, so it is memoized per
+    (session, sf_dir) under ``session.session_memo``'s staleness
+    contract; ``force=True`` re-registers (e.g. after an external view
+    drop)."""
+
+    def build() -> dict[str, DataFrame]:
+        dfs = load_tables(spark, sf_dir)
+        for name, df in dfs.items():
+            df.createOrReplaceTempView(name)
+        return dfs
+
+    return session_memo(spark, ("views", sf_dir), build, force=force)

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from ora_ch_spark.io import local_df
 from ora_ch_spark.operators.cluster import _assign, seed_centroids
 from ora_ch_spark.operators.similarity import quantize
+from ora_ch_spark.session import overlap
 
 
 def _explode_subspaces(q: DataFrame, m: int, sub: int, id_col: str) -> DataFrame:
@@ -705,54 +706,58 @@ def build_ivfadc_index(
     # the coarse-quantizer and codebook writes are independent of the
     # training/encode chain that follows each of them — overlap them
     # (guide §2.6; store data writes run outside the commit lock, and
-    # the writes land in DIFFERENT tables). The pool joins before the
-    # final codes write returns, so the index is never published
-    # partially.
-    from concurrent.futures import ThreadPoolExecutor
+    # the writes land in DIFFERENT tables). Both joins finish before
+    # the codes write starts, so the write order is kept: coarse and
+    # codebooks, then codes. Each table commits on its own, though: a
+    # failure after the first write leaves the new coarse quantizer
+    # beside the old codes until the next build succeeds (there is no
+    # atomic multi-table publish).
+    spark = q.sparkSession
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        coarse_write = pool.submit(
-            store.write, schema, f"{name}_coarse",
-            coarse.select(F.col("cluster").alias("list"), "cq"),
-        )
+    def train_and_encode():
         lists = _assign(q, coarse, id_col).select(
             F.col(id_col).alias("n_id"), F.col("cluster").alias("list")
         )
         qsub = _explode_subspaces(q, m, sub, id_col)
         seeds = _seed_grouped(q, k_codes, m, sub, id_col)
         crows = _train_centroids_grouped(qsub, seeds, id_col)
-        # one-slice local relation: 1 task, 1 output file (instead of
-        # up to 32 near-empty files for a k·m-row codebook table), and
-        # every later read/collect of the codebooks is a single task
-        cb_write = pool.submit(
-            store.write, schema, f"{name}_codebooks",
-            local_df(
-                q.sparkSession,
-                [
-                    (int(r["s"]), int(r["cluster"]), list(r["cq"]))
-                    for r in crows
-                ],
-                "s int, code int, cq array<bigint>",
-            ),
-        )
         # persisted: BOTH the code write and the drift-baseline stat
         # read this — without the persist the encode mapInPandas pass
         # runs twice
         assigned = _assign_grouped(qsub, crows, id_col).persist()
-        enc = assigned.select(
-            F.col(id_col).alias("n_id"), "s", F.col("cluster").alias("code")
+        # one-slice local relation: 1 task, 1 output file (instead of
+        # up to 32 near-empty files for a k·m-row codebook table), and
+        # every later read/collect of the codebooks is a single task
+        codebooks = local_df(
+            spark,
+            [(int(r["s"]), int(r["cluster"]), list(r["cq"])) for r in crows],
+            "s int, code int, cq array<bigint>",
         )
-        codes = enc.join(lists, "n_id")
         # training-time quantization error, committed ATOMICALLY with
         # the codes (snapshot meta): the baseline
         # :func:`index_drift_report` compares appended batches against
         # — one extra sum over the already-computed per-subspace
         # assignment distances
-        stat = assigned.agg(
-            F.sum("dist").alias("e"), F.countDistinct(id_col).alias("n")
-        ).first()
-        coarse_write.result()
-        cb_write.result()
+        _, stat = overlap(
+            spark,
+            lambda: store.write(schema, f"{name}_codebooks", codebooks),
+            lambda: assigned.agg(
+                F.sum("dist").alias("e"), F.countDistinct(id_col).alias("n")
+            ).first(),
+        )
+        return lists, assigned, stat
+
+    _, (lists, assigned, stat) = overlap(
+        spark,
+        lambda: store.write(
+            schema, f"{name}_coarse",
+            coarse.select(F.col("cluster").alias("list"), "cq"),
+        ),
+        train_and_encode,
+    )
+    codes = assigned.select(
+        F.col(id_col).alias("n_id"), "s", F.col("cluster").alias("code")
+    ).join(lists, "n_id")
     # one contiguous file region per inverted list (same layout note
     # as build_ivf_index: without the repartition every upstream task
     # writes a sliver into every list dir)

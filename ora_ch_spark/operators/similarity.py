@@ -11,7 +11,7 @@ Scale design:
 - ``cosine_topk_bruteforce`` is the exact baseline: a broadcast join
   of the (small) query set against the corpus — one pass, no N²
   among corpus vectors, no shuffle beyond the top-k window.
-- ``lsh_bucket_assign`` + ``cosine_topk_lsh`` is the scale path:
+- ``lsh_bucket_assign`` + ``cosine_topk_lsh_multiprobe`` is the scale path:
   sign-random-projection buckets (hyperplane signs derived from md5 —
   seed-free deterministic) prune candidates to same-bucket vectors;
   bucket assignment is embarrassingly parallel and the join key is
@@ -28,9 +28,7 @@ generation, carried by ONE entry point:
 (``n_probes=1`` = the old single-bucket probe, recall@5 ~0.08 at 4
 planes on the gate corpus; the default ``LSH_DEFAULT_PROBES`` sits at
 the measured recall-ladder elbow, ~0.86 recall@5) →
-``banded_lsh_buckets`` (OR of tables). ``cosine_topk_lsh`` is a
-deprecated alias of the same function — it no longer silently probes
-a single bucket. The
+``banded_lsh_buckets`` (OR of tables). The
 COMPRESSED paths (PQ/ADC distances) lose recall in SCORING instead —
 their knob is :func:`rerank_exact` (``rerank=R`` on ``pq_topk`` /
 ``ivfadc_topk``): shortlist by the compressed metric, exact-refine
@@ -41,12 +39,11 @@ decode is near-exact, so routing is its only loss. The
 
 from __future__ import annotations
 
-import warnings
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ora_ch_spark.functions.hashes import lsh_plane_signs
+from ora_ch_spark.session import overlap
 
 # hard cap on driver-collected coarse quantizers (64k centroid rows ≈
 # a few MB at typical dims — far above any sane n_lists, far below
@@ -145,60 +142,6 @@ def lsh_bucket_assign(
         bit = F.when(dot_p > 0, F.lit(1 << p).cast("bigint")).otherwise(F.lit(0).cast("bigint"))
         bucket = bit if bucket is None else bucket + bit
     return q.withColumn("bucket", bucket)
-
-
-def cosine_topk_lsh(
-    emb: DataFrame,
-    query_ids: DataFrame | None = None,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    k: int = 5,
-    n_planes: int = 4,
-    dims: int = 64,
-    n_probes: int = 1,
-) -> DataFrame:
-    """Deprecated alias of :func:`cosine_topk_lsh_multiprobe` (r13;
-    r14 restores the legacy contract per ADVICE): the default stays
-    the historical single-bucket probe (``n_probes=1`` — bit-for-bit
-    the old candidate set, ``test_multiprobe_nprobes1_is_plain_lsh``)
-    and the legacy output schema ``(q_id, bucket, n_id, rank,
-    cosine)`` is preserved — a DeprecationWarning is hidden by
-    default outside tests, so the alias must not silently change
-    rows or columns under existing callers. The single-bucket
-    probe's recall@5 is ~0.08 at the 4-plane default: callers who
-    want the recall-ladder elbow switch to
-    :func:`cosine_topk_lsh_multiprobe` (default ``n_probes=11``)."""
-    warnings.warn(
-        "cosine_topk_lsh is deprecated; call cosine_topk_lsh_multiprobe "
-        "(its n_probes=11 default is the measured recall elbow; "
-        "n_probes=1 reproduces this alias's single-bucket probe)",
-        DeprecationWarning,
-        stacklevel=2,
-    )
-    out = cosine_topk_lsh_multiprobe(
-        emb,
-        query_ids=query_ids,
-        id_col=id_col,
-        emb_col=emb_col,
-        k=k,
-        n_planes=n_planes,
-        dims=dims,
-        n_probes=n_probes,
-    )
-    # legacy ``bucket`` column = the query's own bucket (the old
-    # plan's equi-join key). Restricted to the query side, so with
-    # ``query_ids`` it's a broadcast-sized join, not a corpus pass
-    src = emb if query_ids is None else emb.join(
-        F.broadcast(query_ids.select(id_col)), id_col
-    )
-    qb = lsh_bucket_assign(src, id_col, emb_col, n_planes, dims).select(
-        F.col(id_col).alias("q_id"), "bucket"
-    )
-    if query_ids is not None:
-        qb = F.broadcast(qb)
-    return out.join(qb, "q_id").select(
-        "q_id", "bucket", "n_id", "rank", "cosine"
-    )
 
 
 def _probe_masks(n_planes: int) -> list[int]:
@@ -751,27 +694,27 @@ def build_ivf_index(
     # k rows — one file keeps every later read/collect a single task.
     # The write is a LOCAL relation (no corpus scan), independent of
     # the assignment chain → overlap it with the stat action (guide
-    # §2.6; store data writes run outside the commit lock) and join
-    # before the assign-table write so the index never publishes
-    # partially.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        cents_write = pool.submit(
-            store.write, schema, f"{name}_centroids", seeds_local
-        )
-        # training-time routing quality, committed atomically with the
-        # assign snapshot: baseline for ivf_index_drift_report. The
-        # assigned centroid IS the argmax-cosine winner, so the error
-        # comes from the carried per-row cosine — no corpus x
-        # centroids pass at build time (partial sums stay
-        # per-assign-partition in row order, exactly as the
-        # broadcast-join form aggregated them)
-        srow = assign.agg(
+    # §2.6; store data writes run outside the commit lock). The join
+    # comes before the assign-table write, so the write order is kept:
+    # centroids, then assignment. Each table commits on its own,
+    # though: a failure after the centroids write leaves the new
+    # centroids beside the old assignment until the next build
+    # succeeds (there is no atomic multi-table publish).
+    # The stat is the training-time routing quality, committed
+    # atomically with the assign snapshot: baseline for
+    # ivf_index_drift_report. The assigned centroid IS the
+    # argmax-cosine winner, so the error comes from the carried
+    # per-row cosine — no corpus x centroids pass at build time
+    # (partial sums stay per-assign-partition in row order, exactly as
+    # the broadcast-join form aggregated them)
+    _, srow = overlap(
+        q.sparkSession,
+        lambda: store.write(schema, f"{name}_centroids", seeds_local),
+        lambda: assign.agg(
             F.avg(F.lit(1.0) - F.col("cosine")).alias("err"),
             F.count(F.lit(1)).alias("n"),
-        ).first()
-        cents_write.result()
+        ).first(),
+    )
     stat = (float(srow["err"]), int(srow["n"]))
     assign_out = assign.select(id_col, "centroid", *keep_cols, "qe")
     # cluster rows by list BEFORE the hive write: without this every

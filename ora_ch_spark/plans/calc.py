@@ -19,14 +19,13 @@ which is exactly what the reference emulates with
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ora_ch_spark.functions.dialect import translate_ch_sql
 from ora_ch_spark.functions.params import bind_params
 from ora_ch_spark.runlog import RunLog
+from ora_ch_spark.session import overlap
 from ora_ch_spark.specs import CalcQuery, QueryMeta
 from ora_ch_spark.store import TableStore
 
@@ -120,44 +119,16 @@ class CalcEngine:
         self,
         queries: list[CalcQuery],
         key_columns: list[str] | None = None,
-        interleave: bool = False,
     ) -> dict[int, int]:
         """Queries sorted by ``order_by`` run sequentially; per query
-        the local-cache copy and export run as two concurrent futures
-        (reference fork/join ``calc/CalcLogic.scala:109-122,132``).
+        the local-cache copy and export run as two concurrent thunks
+        (reference fork/join ``calc/CalcLogic.scala:109-122,132``)."""
+        return {
+            q.query_id: self._run_one(q, key_columns)
+            for q in sorted(queries, key=lambda x: x.order_by)
+        }
 
-        ``interleave=True`` schedules via the C6 pairwise divider
-        (``plans/interleave.py`` ≙ ``calc/QueryParDivider.scala`` —
-        dead code in the reference, an opt-in strategy here): batches
-        of two queries with DIFFERENT query_ids run concurrently,
-        the tail of the last remaining id drains sequentially."""
-        copied: dict[int, int] = {}
-        ordered = sorted(queries, key=lambda x: x.order_by)
-        if interleave:
-            from ora_ch_spark.plans.interleave import pairwise_batches
-
-            for batch in pairwise_batches(ordered):
-                if len(batch) == 1:
-                    self._run_one(batch[0], key_columns, copied)
-                else:
-                    with ThreadPoolExecutor(max_workers=len(batch)) as pool:
-                        futs = [
-                            pool.submit(self._run_one, q, key_columns, copied)
-                            for q in batch
-                        ]
-                        for f in futs:
-                            f.result()
-            return copied
-        for q in ordered:
-            self._run_one(q, key_columns, copied)
-        return copied
-
-    def _run_one(
-        self,
-        q: CalcQuery,
-        key_columns: list[str] | None,
-        copied: dict[int, int],
-    ) -> None:
+    def _run_one(self, q: CalcQuery, key_columns: list[str] | None) -> int:
         run = self.runlog.begin_query(q.query_id, par_degree=q.copy_by_parts_cnt)
         try:
             meta = self.catalog.get(q.query_id)
@@ -168,17 +139,12 @@ class CalcEngine:
                 )
             self.materialize(meta, q)
             self.runlog.query_stage(run, "copying")
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                futs = [pool.submit(self.export, meta, q)]
-                if q.copy_to_local_cache:
-                    futs.append(
-                        pool.submit(self.promote_local_cache, meta, key_columns)
-                    )
-                copied[q.query_id] = futs[0].result()
-                for f in futs[1:]:
-                    f.result()
-            run.copied_rows = copied[q.query_id]
+            copies = [lambda: self.export(meta, q)]
+            if q.copy_to_local_cache:
+                copies.append(lambda: self.promote_local_cache(meta, key_columns))
+            run.copied_rows = overlap(self.spark, *copies)[0]
             self.runlog.query_stage(run, "finished")
         except Exception as e:  # error capture parity (P6)
             self.runlog.query_error(run, repr(e))
             raise
+        return run.copied_rows

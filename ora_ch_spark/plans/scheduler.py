@@ -19,14 +19,13 @@ reference's per-table fibers each holding a pooled JDBC connection.
 from __future__ import annotations
 
 import threading
-import time
-from concurrent.futures import ThreadPoolExecutor, as_completed
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ora_ch_spark.operators.load_ops import apply_operation
 from ora_ch_spark.runlog import RunLog, State
+from ora_ch_spark.session import overlap
 from ora_ch_spark.specs import Operation, TableSpec, TaskSpec
 from ora_ch_spark.store import TableStore
 
@@ -63,7 +62,6 @@ class TaskScheduler:
         task: TaskSpec,
         sources: dict[str, DataFrame] | None = None,
         key_columns: dict[str, list[str]] | None = None,
-        use_fair_pools: bool = True,
         validate_golden: bool = False,
     ) -> dict[str, int]:
         """Execute a task; returns {table_full_name: copied_rows}."""
@@ -92,10 +90,9 @@ class TaskScheduler:
                         run.base_count = self.store.row_count(spec.schema, spec.name)
                 except Exception:
                     pass
-                if use_fair_pools:
-                    self.spark.sparkContext.setLocalProperty(
-                        "spark.scheduler.pool", f"table-{spec.name}"
-                    )
+                self.spark.sparkContext.setLocalProperty(
+                    "spark.scheduler.pool", f"table-{spec.name}"
+                )
                 try:
                     n = apply_operation(
                         self.store, spec, load_source(spec),
@@ -127,13 +124,11 @@ class TaskScheduler:
                     self.runlog.table_error(run, repr(e))
                     raise
                 finally:
-                    if use_fair_pools:
-                        self.spark.sparkContext.setLocalProperty("spark.scheduler.pool", None)
+                    self.spark.sparkContext.setLocalProperty("spark.scheduler.pool", None)
 
             # phase 1: non-update ops, parallel per degree semantics
             phase1 = [t for t in task.tables if t.operation is not Operation.UPDATE]
             phase2 = [t for t in task.tables if t.operation is Operation.UPDATE]
-            workers = task.effective_parallelism
             stop_monitor = threading.Event()
             monitor = threading.Thread(
                 target=self._progress_monitor,
@@ -142,21 +137,13 @@ class TaskScheduler:
             )
             monitor.start()
             try:
-                if workers > 1 and len(phase1) > 1:
-                    with ThreadPoolExecutor(max_workers=workers) as pool:
-                        futs = {pool.submit(run_one, t): t for t in phase1}
-                        for f in as_completed(futs):
-                            name, n = f.result()
-                            results[name] = n
-                else:
-                    for t in phase1:
-                        name, n = run_one(t)
-                        results[name] = n
+                results.update(overlap(
+                    self.spark, *(lambda t=t: run_one(t) for t in phase1),
+                    workers=task.effective_parallelism,
+                ))
                 # phase 2: updates, serialized after all appends
                 # (task/TaskLogic.scala:319-348)
-                for t in phase2:
-                    name, n = run_one(t)
-                    results[name] = n
+                results.update(run_one(t) for t in phase2)
             finally:
                 stop_monitor.set()
             self.runlog.finish_task(task_id)

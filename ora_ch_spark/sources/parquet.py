@@ -19,8 +19,8 @@ def parquet_source(spark: SparkSession, base_dir: str):
     TableSpec's source table to ``<base_dir>/<table>.parquet``.
 
     Goes through ``io.load_table`` so source-specific handling (the
-    events table's nanosecond timestamps, UTC pinning) applies on
-    every path, not just the catalog's."""
+    events table's timestamp normalization) applies on every path,
+    not just the catalog's."""
 
     def load(spec: TableSpec) -> DataFrame:
         name = spec.src_table_full_name or spec.name

@@ -95,8 +95,6 @@ def streaming_stateful_dedup(
     """Cross-batch exactly-once dedup by (user_id, event_id) as a
     Structured Streaming stateful operator; runs the available input
     to completion and returns the materialized output."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     events_path = as_stream_dir(events_path, "stream_dedup_src_")
     static = spark.read.parquet(events_path)
     stream = (
@@ -188,7 +186,6 @@ def streaming_dedup_tws(
         def close(self) -> None:
             pass
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     # the state-v2 operator requires the RocksDB state store (the
     # HDFS-backed default does not implement its column families)
     spark.conf.set(
@@ -301,8 +298,6 @@ def streaming_sessionize(
     newer files advances the watermark and flushes timed-out sessions
     — incremental, exactly-once per the checkpoint. Returns the
     sessions emitted so far."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     static = spark.read.parquet(source_dir)
     from ora_ch_spark.io import normalize_ts
 

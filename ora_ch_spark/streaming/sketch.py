@@ -32,7 +32,6 @@ def streaming_hll_registers(
     files of a streaming parquet source (availableNow) and return the
     materialized register table (grp, bucket, M). ``key_expr`` /
     ``group_expr`` are SQL expressions over the source rows."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     source_dir = as_stream_dir(source_dir, "stream_hll_src_")
     static = spark.read.parquet(source_dir)
     stream = (
@@ -69,7 +68,6 @@ def streaming_cms_counters(
     the batch sketch of everything seen (equivalence is the gate
     oracle). Heavy-hitter queries probe the emitted table with
     ``cms_estimate`` without touching the stream."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     source_dir = as_stream_dir(source_dir, "stream_cms_src_")
     static = spark.read.parquet(source_dir)
     stream = (

@@ -61,8 +61,6 @@ def streaming_hourly_rollup(
     Append mode means only windows whose end ≤ final watermark
     (max(ts) − delay) are emitted — deterministic for a static input.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     events_path = as_stream_dir(events_path, "stream_src_")
     from ora_ch_spark.io import normalize_ts
 
@@ -149,8 +147,6 @@ def streaming_dedup_within_watermark(
     first row" are partition-order-dependent; the key set is what is
     deterministic and differential-testable).
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     keys = keys or ["user_id", "event_type"]
     events_path = as_stream_dir(events_path, "stream_dwm_src_")
     from ora_ch_spark.io import normalize_ts
@@ -196,8 +192,6 @@ def streaming_stream_join(
     emitted set exactly the batch join's — differential-testable; the
     same query on a live multi-batch stream emits incrementally with
     identical total results within the watermark horizon."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     events_path = as_stream_dir(events_path, "stream_ssj_src_")
     from ora_ch_spark.io import normalize_ts
 

@@ -77,48 +77,6 @@ def test_calc_queries_run_in_order(spark, sf_smoke):
     assert store.row_count("ora", "a") == 1 and store.row_count("ora", "b") == 1
 
 
-def test_pairwise_interleaver_batches():
-    """C6 (QueryParDivider.scala:6-42, dead code in the reference —
-    opt-in strategy here): two-id batches while ≥2 queues live, the
-    last queue drains singly; FIFO within a queue; smallest two ids
-    pair first (documented determinism deviation from the Scala's
-    unordered-Map pick)."""
-    from ora_ch_spark.plans.interleave import pairwise_batches
-
-    class Q:
-        def __init__(self, qid, tag):
-            self.query_id, self.tag = qid, tag
-
-    qs = [Q(1, "a"), Q(1, "b"), Q(1, "c"), Q(2, "d"), Q(2, "e"), Q(3, "f")]
-    got = [[x.tag for x in b] for b in pairwise_batches(qs)]
-    assert got == [["a", "d"], ["b", "e"], ["c", "f"]]
-    solo = [[x.tag for x in b] for b in pairwise_batches([Q(7, "x"), Q(7, "y")])]
-    assert solo == [["x"], ["y"]]
-    assert pairwise_batches([]) == []
-
-
-def test_calc_run_interleaved(spark, sf_smoke):
-    """CalcEngine.run(interleave=True) executes pairwise batches of
-    independent query ids and lands the same results as the
-    sequential path."""
-    register_views(spark, sf_smoke)
-    store = _store(spark)
-    m1 = QueryMeta(query_id=1, ch_table="ch_i1", ora_table="i1",
-                   query="select count(*) as n from orders",
-                   ch_schema="ch", ora_schema="ora")
-    m2 = QueryMeta(query_id=2, ch_table="ch_i2", ora_table="i2",
-                   query="select count(*) as n from customer",
-                   ch_schema="ch", ora_schema="ora")
-    engine = CalcEngine(spark, store, {1: m1, 2: m2})
-    copied = engine.run(
-        [CalcQuery(query_id=1, order_by=1), CalcQuery(query_id=2, order_by=2)],
-        interleave=True,
-    )
-    assert set(copied) == {1, 2}
-    assert store.row_count("ora", "i1") == 1
-    assert store.row_count("ora", "i2") == 1
-
-
 def test_update_with_staging_cleanup_and_watermark(spark, sf_smoke):
     """O5 + S11: changed-row detection by sync_update_by_column_max
     (caller-side watermark) and staging cleared after the update."""
@@ -413,7 +371,7 @@ def test_verbatim_6184_full_calc_engine_e2e(spark, sf_correct):
     from ora_ch_spark.catalog import (
         _V6184_PARAMS,
         _V6184_VALUES,
-        _v6184_create_fixture_views,
+        _v6184_fixture,
         _v6184_view_body,
         calc_verbatim_q,
     )
@@ -422,7 +380,7 @@ def test_verbatim_6184_full_calc_engine_e2e(spark, sf_correct):
     from ora_ch_spark.specs import CalcQuery, QueryMeta
     from ora_ch_spark.store import TableStore
 
-    _v6184_create_fixture_views(spark, sf_correct)
+    _v6184_fixture(spark, sf_correct)
     derby = "org.apache.derby.jdbc.EmbeddedDriver"
     db = os.path.join(tempfile.mkdtemp(prefix="derby_calc6184_"), "oradb")
     url = f"jdbc:derby:{db};create=true"

@@ -712,41 +712,20 @@ def test_rerank_joins_shortlist_only(spark, sf_smoke):
 
 def test_multiprobe_nprobes1_is_plain_lsh(spark, sf_smoke):
     """Perturbation-cost ranking sanity: mask 0 costs 0, so
-    n_probes=1 probes exactly the query's own bucket — the plain
-    (pre-r13 single-bucket) LSH result; widening probes only ever
-    adds candidates (recall is monotone in n_probes); and the
-    deprecated alias warns but DEFAULTS to the legacy single-bucket
-    rows and legacy (q_id, bucket, n_id, rank, cosine) schema — the
-    warning is invisible outside tests, so the alias must not change
-    results under existing callers (ADVICE r14)."""
-    import warnings as _warnings
-
+    n_probes=1 probes exactly the query's own bucket — every
+    neighbour shares the query's ``lsh_bucket_assign`` bucket — and
+    widening probes only ever adds candidates (recall is monotone in
+    n_probes)."""
     from ora_ch_spark.io import load_table
     from ora_ch_spark.operators import similarity as S
 
     emb = load_table(spark, sf_smoke, "embeddings")
     qids = emb.filter("vec_id < 10")
-    with pytest.warns(DeprecationWarning, match="cosine_topk_lsh"):
-        plain_rows = S.cosine_topk_lsh(
-            emb, query_ids=qids, n_planes=4, dims=64, n_probes=1).collect()
-    plain = {(r["q_id"], r["n_id"], r["rank"]) for r in plain_rows}
-    mp1 = {(r["q_id"], r["n_id"], r["rank"])
-           for r in S.cosine_topk_lsh_multiprobe(
-               emb, query_ids=qids, n_planes=4, dims=64, n_probes=1).collect()}
-    assert mp1 == plain
-    # alias default == the LEGACY single-bucket rows with the legacy
-    # schema, bucket = the query's own bucket
-    with _warnings.catch_warnings():
-        _warnings.simplefilter("ignore", DeprecationWarning)
-        dflt_df = S.cosine_topk_lsh(emb, query_ids=qids, n_planes=4, dims=64)
-        assert dflt_df.columns == ["q_id", "bucket", "n_id", "rank", "cosine"]
-        dflt_rows = dflt_df.collect()
-    assert {(r["q_id"], r["n_id"], r["rank"]) for r in dflt_rows} == plain
-    qbuck = {r["vec_id"]: r["bucket"]
-             for r in S.lsh_bucket_assign(
-                 emb.join(qids.select("vec_id"), "vec_id"),
-                 n_planes=4, dims=64).collect()}
-    assert all(r["bucket"] == qbuck[r["q_id"]] for r in dflt_rows)
+    one = S.cosine_topk_lsh_multiprobe(
+        emb, query_ids=qids, n_planes=4, dims=64, n_probes=1).collect()
+    buck = {r["vec_id"]: r["bucket"]
+            for r in S.lsh_bucket_assign(emb, n_planes=4, dims=64).collect()}
+    assert one and all(buck[r["n_id"]] == buck[r["q_id"]] for r in one)
     assert S.LSH_DEFAULT_PROBES >= 11
     truth = {
         (r["q_id"], r["n_id"])
@@ -1127,12 +1106,10 @@ def test_multiprobe_wide_hash_mask_path(spark, sf_smoke):
     emb = load_table(spark, sf_smoke, "embeddings")
     qids = emb.filter("vec_id < 10")
     one = S.cosine_topk_lsh_multiprobe(
-        emb, query_ids=qids, n_planes=8, dims=64, n_probes=1)
-    with pytest.warns(DeprecationWarning):
-        plain = S.cosine_topk_lsh(
-            emb, query_ids=qids, n_planes=8, dims=64, n_probes=1)
-    t = lambda df: {(r["q_id"], r["n_id"], r["rank"]) for r in df.collect()}  # noqa: E731
-    assert t(one) == t(plain)
+        emb, query_ids=qids, n_planes=8, dims=64, n_probes=1).collect()
+    buck = {r["vec_id"]: r["bucket"]
+            for r in S.lsh_bucket_assign(emb, n_planes=8, dims=64).collect()}
+    assert one and all(buck[r["n_id"]] == buck[r["q_id"]] for r in one)
     truth = {(r["q_id"], r["n_id"])
              for r in S.cosine_topk_bruteforce(emb, query_ids=qids).collect()}
     last = -1
