@@ -443,6 +443,18 @@ group by lpad(toString(c_nationkey), 3, '0'), toYear(o_orderdate),
          toYYYYMMDD(o_orderdate),
          if(o_totalprice > {bigthr:Decimal(38,6)}, 'BIG', 'SMALL')
 """
+_CALC_STORED_PARAMS = (
+    QueryParam("bigthr", ParamType.DECIMAL, 1),
+    QueryParam("seg", ParamType.STRING, 2),
+    QueryParam("from_date", ParamType.STRING, 3),
+    QueryParam("modk", ParamType.UINT32, 4),
+)
+_CALC_STORED_VALUES = {
+    "bigthr": "250000",
+    "seg": "BUILDING",
+    "from_date": "1995-06-01",
+    "modk": "7",
+}
 
 
 def calc_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -457,12 +469,7 @@ def calc_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         ch_table="ch_calc_orders",
         ora_table="calc_orders",
         query=_CALC_STORED_SQL,
-        params=(
-            QueryParam("bigthr", ParamType.DECIMAL, 1),
-            QueryParam("seg", ParamType.STRING, 2),
-            QueryParam("from_date", ParamType.STRING, 3),
-            QueryParam("modk", ParamType.UINT32, 4),
-        ),
+        params=_CALC_STORED_PARAMS,
         ch_schema="ch",
         ora_schema="msk_arm_lead",
     )
@@ -473,12 +480,7 @@ def calc_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                 query_id=6184,
                 copy_by_parts_key="nation_code",
                 copy_by_parts_cnt=4,
-                params={
-                    "bigthr": "250000",
-                    "seg": "BUILDING",
-                    "from_date": "1995-06-01",
-                    "modk": "7",
-                },
+                params=dict(_CALC_STORED_VALUES),
             )
         ]
     )
@@ -1330,14 +1332,14 @@ def _v6184_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     and return the verbatim query's ANALYZED base frame. Shared by the
     gated entry and the CalcEngine e2e test.
 
-    Memoized per (session, sf_dir) with ``session.session_memo``: the
-    13 CREATE OR REPLACE VIEW statements cost ~1.7 s even warm, and the
-    bind → translate → Catalyst analysis of the 156-line text another
-    ~1.7 s, for identical results. The views live in the session's
-    catalog, so a fresh session rebuilds; switching sf_dir recreates
-    the views and re-analyzes in one step. The memo holds a LAZY
-    logical plan — every action still executes the full join DAG
-    from the parquet inputs."""
+    Memoized per (session, sf_dir) with ``session.session_memo``: warm,
+    at sf0.01 on 4 cores, the 13 CREATE OR REPLACE VIEW statements cost
+    ~1.6 s, binding and translating the 156-line text ~0.2 s and its
+    Catalyst analysis ~1.5 s, for identical results. The views live in
+    the session's catalog, so a fresh session rebuilds; switching
+    sf_dir recreates the views and re-analyzes in one step. The memo
+    holds a LAZY logical plan — every action still executes the full
+    join DAG from the parquet inputs."""
     from ora_ch_spark.functions.dialect import translate_ch_sql
     from ora_ch_spark.functions.params import bind_params
 

@@ -107,6 +107,7 @@ not a regex over the whole call.
 
 from __future__ import annotations
 
+import functools
 import re
 
 # CH strftime-ish tokens → Spark datetime pattern tokens (batch 31
@@ -177,6 +178,8 @@ def _convert_fmt(fmt: str) -> str | None:
 
 
 def _inside_string(sql: str, pos: int) -> bool:
+    if sql.find("'", 0, pos) < 0:
+        return False  # no quote before pos (the masked-text case)
     in_str = False
     i = 0
     while i < pos:
@@ -189,10 +192,22 @@ def _inside_string(sql: str, pos: int) -> bool:
     return in_str
 
 
+# One compiled call-site pattern per function name, for the life of the
+# process. A single translation visits ~700 distinct names, more than
+# the ``re`` module's own cache holds (``re._MAXCACHE`` = 512), so an
+# uncached ``re.compile`` here recompiled nearly every pattern on every
+# statement. The names come from the translator's own tables, never
+# from the SQL text, so the memo is bounded by them.
+@functools.lru_cache(maxsize=None)
+def _call_pattern(fname: str) -> re.Pattern[str]:
+    return re.compile(rf"(?<![A-Za-z0-9_]){re.escape(fname)}\s*\(", re.IGNORECASE)
+
+
 def _find_call(sql: str, fname: str, start: int = 0) -> tuple[int, int, list[str]] | None:
     """Locate ``fname( ... )`` at/after ``start``; return (begin, end_exclusive,
-    [arg texts]) with balanced parens and quote awareness."""
-    pat = re.compile(rf"(?<![A-Za-z0-9_]){re.escape(fname)}\s*\(", re.IGNORECASE)
+    [arg texts]) with balanced parens and quote awareness. The pattern
+    comes from :func:`_call_pattern`'s memo (see there for why)."""
+    pat = _call_pattern(fname)
     m = pat.search(sql, start)
     while m and _inside_string(sql, m.start()):
         m = pat.search(sql, m.end())
