@@ -231,9 +231,15 @@ def op_update(
         *key_columns, *[F.col(f).alias(f"__upd_{f}") for f in fields]
     ).persist()
     try:
-        # one job materializes the (small) update set; the count both
-        # feeds the run log and tells us whether broadcasting is safe
-        n_upd = upd_renamed.count()
+        # one action materializes the (small) update set; the count
+        # feeds the run log and tells us whether broadcasting is safe,
+        # and the first key's range feeds the zone-map pre-check below
+        k0 = key_columns[0] if key_columns else None
+        probe = upd_renamed.agg(
+            F.count(F.lit(1)).alias("n"),
+            *([F.min(k0).alias("lo"), F.max(k0).alias("hi")] if k0 else []),
+        ).first()
+        n_upd = probe["n"]
         join_side = (
             F.broadcast(upd_renamed)
             if n_upd <= BROADCAST_UPDATES_MAX_ROWS
@@ -248,8 +254,8 @@ def op_update(
         #   1. updates ≥ ¼ of table rows → every file is statistically
         #      hit; full merge, zero probe cost (r7 rule, kept).
         #   2. manifest zone-map range check (driver-side, no table
-        #      scan — one tiny agg on the already-persisted update
-        #      set): if the update-key range overlaps > ½ of the data
+        #      scan — the key range comes from the probe above): if the
+        #      update-key range overlaps > ½ of the data
         #      files, the update is scattered and the probe would keep
         #      ~everything — full merge. Clustered updates (the
         #      watermark/backfill case the file-pruned path exists
@@ -257,20 +263,16 @@ def op_update(
         #      over ONLY those candidates.
         large_update = total_rows > 0 and n_upd * 4 >= total_rows
         candidates: list[str] | None = None
-        if not part_cols and not large_update and key_columns:
-            k0 = key_columns[0]
-            rng = upd_renamed.agg(
-                F.min(k0).alias("lo"), F.max(k0).alias("hi")
-            ).first()
+        if not part_cols and not large_update and k0:
             if (
-                rng["lo"] is not None
-                and isinstance(rng["lo"], int)
-                and not isinstance(rng["lo"], bool)
+                probe["lo"] is not None
+                and isinstance(probe["lo"], int)
+                and not isinstance(probe["lo"], bool)
             ):
                 cand, total_files = store.prune_files(
                     spec.schema,
                     spec.name,
-                    f"{k0} >= {rng['lo']} AND {k0} <= {rng['hi']}",
+                    f"{k0} >= {probe['lo']} AND {k0} <= {probe['hi']}",
                 )
                 if total_files and len(cand) * 2 > total_files:
                     large_update = True  # scattered: probe can't prune

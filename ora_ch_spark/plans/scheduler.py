@@ -1,14 +1,29 @@
-"""Phased parallel task execution (P1/P2/P4/P6).
+"""Per-table parallel task execution (P1/P2/P4/P6).
 
 Reference behavior (``task/TaskLogic.scala:285-363``):
 - tables with operation ≠ update run in parallel at ``degree - 1``
   workers when ``degree > 3``, else sequentially;
-- update operations always run as a second, serialized phase;
+- update operations run after all of them, as a serialized second
+  phase (``:319-348``);
 - a forked fiber polls progress every 5 s (``:201-207``);
 - one in-flight task at a time (single-flight guard,
   ``server/WServer.scala:38-52``);
 - errors are captured into the run log with state='error'
   (``:58-76``).
+
+The update ordering matters only per table: an update mutates its own
+table from its own staging rows (SURVEY §2.2 O5). So instead of a
+global barrier the task is cut into per-table chains
+(``table_chains``): ops on one table, the update's staging table, or
+reading the updated table share a chain and run in order, and the
+chains run side by side at the same ``degree - 1`` workers. An update
+no longer waits for the slowest unrelated load.
+
+Deliberate difference from the reference: when a non-update op fails,
+the reference runs no update at all; here an update in another chain
+may already have committed. The task still ends ``Error`` and re-raises
+the first failure in result order. Updates are keyed overwrites whose
+watermark advances only after a successful write, so a rerun converges.
 
 Spark notes: parallel table loads are independent jobs on one
 SparkSession — the FAIR scheduler interleaves their stages across the
@@ -32,6 +47,42 @@ from ora_ch_spark.store import TableStore
 
 class TaskAlreadyRunning(RuntimeError):
     """Single-flight guard (server/WServer.scala:38-52)."""
+
+
+def _waits_for(earlier: TableSpec, op: TableSpec) -> bool:
+    """Must ``op`` run after ``earlier``, an op before it in result order?
+
+    Non-update ops wait only for earlier ops on their own target. An
+    update also waits for loads of its staging table, for ops that read
+    the table it rewrites (they must see the pre-update rows) and, when
+    either of them clears that staging table afterwards (S11), for ops
+    reading the same staging table."""
+    if op.operation is not Operation.UPDATE:
+        return earlier.full_name == op.full_name
+    return (
+        earlier.full_name in (op.full_name, op.source_name)
+        or earlier.source_name == op.full_name
+        or (earlier.source_name == op.source_name and (_clears(op) or _clears(earlier)))
+    )
+
+
+def _clears(spec: TableSpec) -> bool:
+    return spec.operation is Operation.UPDATE and spec.clr_ora_table_aft_upd
+
+
+def table_chains(ordered: list[TableSpec]) -> list[list[int]]:
+    """Cut ``ordered`` (non-update ops, then updates, each in declared
+    order) into chains of indices. An op joins every chain holding an
+    op it waits for, merging them; otherwise it starts its own. Each
+    chain keeps ``ordered``'s order, and chains are listed by their
+    first op, so a task without updates or shared targets gets one
+    chain per op in declared order."""
+    chains: list[list[int]] = []
+    for i, op in enumerate(ordered):
+        hit = [c for c in chains if any(_waits_for(ordered[j], op) for j in c)]
+        chains = [c for c in chains if not any(c is h for h in hit)]
+        chains.append(sorted(j for c in hit for j in c) + [i])
+    return sorted(chains)
 
 
 class TaskScheduler:
@@ -72,7 +123,6 @@ class TaskScheduler:
         try:
             task_id = self.runlog.create_task()
             self.runlog.set_task_state(task_id, State.EXECUTING)
-            results: dict[str, int] = {}
 
             def load_source(spec: TableSpec) -> DataFrame:
                 if sources and spec.source_name in sources:
@@ -90,9 +140,9 @@ class TaskScheduler:
                         run.base_count = self.store.row_count(spec.schema, spec.name)
                 except Exception:
                     pass
-                self.spark.sparkContext.setLocalProperty(
-                    "spark.scheduler.pool", f"table-{spec.name}"
-                )
+                sc = self.spark.sparkContext
+                prior_pool = sc.getLocalProperty("spark.scheduler.pool")
+                sc.setLocalProperty("spark.scheduler.pool", f"table-{spec.name}")
                 try:
                     n = apply_operation(
                         self.store, spec, load_source(spec),
@@ -124,28 +174,47 @@ class TaskScheduler:
                     self.runlog.table_error(run, repr(e))
                     raise
                 finally:
-                    self.spark.sparkContext.setLocalProperty("spark.scheduler.pool", None)
+                    # an op run inline must not wipe the caller's pool
+                    sc.setLocalProperty("spark.scheduler.pool", prior_pool)
 
-            # phase 1: non-update ops, parallel per degree semantics
-            phase1 = [t for t in task.tables if t.operation is not Operation.UPDATE]
-            phase2 = [t for t in task.tables if t.operation is Operation.UPDATE]
+            # result order: non-update ops, then updates (the
+            # reference's two phases, task/TaskLogic.scala:319-348);
+            # an update's count replaces its table's append count
+            ordered = [t for t in task.tables if t.operation is not Operation.UPDATE]
+            ordered += [t for t in task.tables if t.operation is Operation.UPDATE]
+            failed: dict[int, Exception] = {}
+
+            def run_chain(chain: list[int]) -> list[tuple[int, tuple[str, int]]]:
+                done = []
+                for i in chain:
+                    try:
+                        done.append((i, run_one(ordered[i])))
+                    except Exception as e:
+                        failed[i] = e
+                        raise  # the rest of this chain does not run
+                return done
+
             stop_monitor = threading.Event()
             monitor = threading.Thread(
                 target=self._progress_monitor,
-                args=(stop_monitor, phase1 + phase2),
+                args=(stop_monitor, ordered),
                 daemon=True,
             )
             monitor.start()
             try:
-                results.update(overlap(
-                    self.spark, *(lambda t=t: run_one(t) for t in phase1),
+                # chains, not phases: at most degree-1 ops at once, and
+                # an update starts when its own table's loads finish
+                done = overlap(
+                    self.spark, *(lambda c=c: run_chain(c) for c in table_chains(ordered)),
                     workers=task.effective_parallelism,
-                ))
-                # phase 2: updates, serialized after all appends
-                # (task/TaskLogic.scala:319-348)
-                results.update(run_one(t) for t in phase2)
+                )
+            except Exception:
+                if failed:
+                    raise failed[min(failed)]
+                raise
             finally:
                 stop_monitor.set()
+            results = dict(r for _, r in sorted(p for chain in done for p in chain))
             self.runlog.finish_task(task_id)
             return results
         except Exception as e:

@@ -437,3 +437,360 @@ def test_tpch_param_splice_binds_typed_literals(spark, sf_correct):
                           {"minq": "400"})
     assert "> 400" in bound20
     assert "*****" in bind_params(T._Q3_CH, (), {})
+
+
+# ---------------------------------------------------------------------------
+# /task schedule: per-table chains instead of a global update phase
+# ---------------------------------------------------------------------------
+
+
+def _task_store(spark, prefix: str):
+    import tempfile
+
+    from ora_ch_spark.store import TableStore
+
+    store = TableStore(spark, tempfile.mkdtemp(prefix=prefix))
+    store.create_database("ch")
+    return store
+
+
+def _kv(spark, n: int, v: int = 0):
+    """Rows ``k`` in [0, n) with a constant ``v``."""
+    return spark.range(0, n).selectExpr("id AS k", f"CAST({v} AS BIGINT) AS v")
+
+
+def _v_by_k(store, name: str) -> dict[int, int]:
+    return {r.k: r.v for r in store.read("ch", name).collect()}
+
+
+def _op(name: str, op, src: str, **kw):
+    from ora_ch_spark.specs import TableSpec
+
+    return TableSpec(schema="ch", name=name, operation=op, src_table_full_name=src, **kw)
+
+
+def _upd(name: str, src: str, **kw):
+    from ora_ch_spark.specs import Operation
+
+    return _op(name, Operation.UPDATE, src, update_fields=("v",), **kw)
+
+
+def test_table_chains_group_ops_per_table():
+    """Same-target ops share a chain in declared order; an update joins
+    the chains of its table, its staging table and the ops reading its
+    table; everything else runs on a chain of its own."""
+    from ora_ch_spark.plans.scheduler import table_chains
+    from ora_ch_spark.specs import Operation
+
+    R = Operation.RECREATE
+    # the etl_sync cycle's shape: the update rides with its table's append
+    cycle = [_op("customer", R, "src.customer"),
+             _op("orders", Operation.APPEND_BY_MAX, "src.orders", sync_by_column_max="k"),
+             _op("lineitem", R, "src.lineitem"),
+             _op("events", R, "src.events"),
+             _upd("orders", "src.orders_upd")]
+    assert table_chains(cycle) == [[0], [1, 4], [2], [3]]
+    # staging load and a reader of the updated table merge into one chain
+    ops = [_op("a_stg", R, "src.a"), _op("x", R, "src.x"), _op("a_copy", R, "ch.a"),
+           _upd("a", "ch.a_stg"), _upd("y", "src.y")]
+    assert table_chains(ops) == [[0, 2, 3], [1], [4]]
+    # a task without updates or shared targets: one chain per op
+    assert table_chains(ops[:3]) == [[0], [1], [2]]
+    # an update that clears its staging table waits for its other readers
+    shared = [_op("s_copy", R, "stg.s"), _upd("s", "stg.s", clr_ora_table_aft_upd=True)]
+    assert table_chains(shared) == [[0, 1]]
+    assert table_chains([shared[0], _upd("s", "stg.s")]) == [[0], [1]]
+
+
+def test_update_starts_when_its_own_loads_finish(spark):
+    """Degree 4: table ``a``'s update (and its staging cleanup) runs
+    while an unrelated table is still loading, instead of waiting for
+    every load of the task."""
+    import threading
+
+    from ora_ch_spark.plans.scheduler import TaskScheduler
+    from ora_ch_spark.specs import Operation, TaskSpec
+
+    store = _task_store(spark, "chain_early_")
+    cleaned = threading.Event()
+    seen: list[bool] = []
+
+    def loader(spec):
+        if spec.name == "x":
+            seen.append(cleaned.wait(10))
+        return {"src.a": _kv(spark, 20), "stg.a": _kv(spark, 5, v=7),
+                "src.x": _kv(spark, 3)}[spec.source_name]
+
+    sched = TaskScheduler(spark, store, source_loader=loader,
+                          staging_cleanup=lambda spec: cleaned.set())
+    task = TaskSpec(tables=(
+        _op("a", Operation.RECREATE, "src.a"),
+        _op("x", Operation.RECREATE, "src.x"),
+        _upd("a", "stg.a", clr_ora_table_aft_upd=True),
+    ), degree=4)
+    res = sched.run_task(task, key_columns={"a": ["k"]})
+    assert seen == [True]
+    assert res == {"ch.a": 5, "ch.x": 3}
+    assert _v_by_k(store, "a") == {k: 7 if k < 5 else 0 for k in range(20)}
+
+
+def test_update_reads_staging_loaded_in_same_task(spark):
+    """Stage-then-update: the update's source is a store table that a
+    (slow) recreate of the same task writes; the update sees its rows."""
+    import time
+
+    from ora_ch_spark.plans.scheduler import TaskScheduler
+    from ora_ch_spark.specs import Operation, TaskSpec
+
+    store = _task_store(spark, "chain_stage_")
+    store.write("ch", "b", _kv(spark, 10))
+    store.write("ch", "b_stg", _kv(spark, 4, v=1))  # last run's staging rows
+
+    def loader(spec):
+        if spec.source_name == "src.b_stg":
+            time.sleep(0.5)
+            return _kv(spark, 4, v=9)
+        return store.read("ch", "b_stg")
+
+    sched = TaskScheduler(spark, store, source_loader=loader)
+    task = TaskSpec(tables=(
+        _upd("b", "ch.b_stg"),
+        _op("b_stg", Operation.RECREATE, "src.b_stg"),
+    ), degree=4)
+    sched.run_task(task, key_columns={"b": ["k"]})
+    assert _v_by_k(store, "b") == {k: 9 if k < 4 else 0 for k in range(10)}
+
+
+def test_reader_of_updated_table_sees_pre_update_rows(spark):
+    """A non-update op copying the table an update rewrites runs before
+    the update, as in the reference's two phases. Were the update to
+    run alongside, the copy would wait for it to finish (its staging
+    cleanup signals it), so a wrong schedule fails here every time."""
+    import threading
+    import time
+
+    from ora_ch_spark.plans.scheduler import TaskScheduler
+    from ora_ch_spark.specs import Operation, TaskSpec
+
+    store = _task_store(spark, "chain_reader_")
+    store.write("ch", "c", _kv(spark, 10))
+    updated = threading.Event()
+
+    def loader(spec):
+        if spec.name == "c_copy":
+            time.sleep(0.2)  # a concurrent update has begun by now
+            if any(r.operation == "update" for r in sched.runlog.tables):
+                updated.wait(30)
+            return store.read("ch", "c")
+        return _kv(spark, 3, v=5)
+
+    sched = TaskScheduler(spark, store, source_loader=loader,
+                          staging_cleanup=lambda spec: updated.set())
+    task = TaskSpec(tables=(
+        _upd("c", "stg.c", clr_ora_table_aft_upd=True),
+        _op("c_copy", Operation.RECREATE, "ch.c"),
+    ), degree=4)
+    sched.run_task(task, key_columns={"c": ["k"]})
+    assert _v_by_k(store, "c_copy") == {k: 0 for k in range(10)}
+    assert _v_by_k(store, "c") == {k: 5 if k < 3 else 0 for k in range(10)}
+
+
+def test_ops_on_one_target_run_in_declared_order(spark):
+    """Two non-update ops on one table never overlap: the slow recreate
+    finishes before the watermark append that follows it starts."""
+    import time
+
+    from ora_ch_spark.plans.scheduler import TaskScheduler
+    from ora_ch_spark.specs import Operation, TaskSpec
+
+    store = _task_store(spark, "chain_order_")
+    calls: list[Operation] = []
+
+    def loader(spec):
+        if spec.name != "d":
+            return _kv(spark, 2)
+        calls.append(spec.operation)
+        if spec.operation is Operation.RECREATE:
+            time.sleep(0.5)
+            return _kv(spark, 10)
+        return _kv(spark, 15)
+
+    sched = TaskScheduler(spark, store, source_loader=loader)
+    task = TaskSpec(tables=(
+        _op("d", Operation.RECREATE, "src.d0"),
+        _op("d", Operation.APPEND_BY_MAX, "src.d1", sync_by_column_max="k"),
+        _op("e", Operation.RECREATE, "src.e"),
+    ), degree=4)
+    res = sched.run_task(task)
+    assert calls == [Operation.RECREATE, Operation.APPEND_BY_MAX]
+    assert res == {"ch.d": 5, "ch.e": 2}
+    assert store.row_count("ch", "d") == 15
+
+
+def test_failed_load_stops_only_its_own_chain(spark):
+    """A failing load of ``b``: the task ends Error and re-raises it,
+    ``b``'s update never runs, and ``a``'s chain (update included)
+    still finishes."""
+    from ora_ch_spark.plans.scheduler import TaskScheduler
+    from ora_ch_spark.runlog import State
+    from ora_ch_spark.specs import Operation, TaskSpec
+
+    store = _task_store(spark, "chain_fail_")
+    store.write("ch", "b", _kv(spark, 10))
+    loads: list[tuple[str, Operation]] = []
+
+    def loader(spec):
+        loads.append((spec.name, spec.operation))
+        if spec.source_name == "src.b":
+            raise RuntimeError("source of b is down")
+        return {"src.a": _kv(spark, 10), "stg.a": _kv(spark, 2, v=3),
+                "stg.b": _kv(spark, 2, v=3)}[spec.source_name]
+
+    sched = TaskScheduler(spark, store, source_loader=loader)
+    task = TaskSpec(tables=(
+        _op("a", Operation.RECREATE, "src.a"),
+        _op("b", Operation.RECREATE, "src.b"),
+        _upd("a", "stg.a"),
+        _upd("b", "stg.b"),
+    ), degree=4)
+    with pytest.raises(RuntimeError, match="source of b is down"):
+        sched.run_task(task, key_columns={"a": ["k"], "b": ["k"]})
+    assert [t.state for t in sched.runlog.tasks.values()] == [State.ERROR]
+    assert ("b", Operation.UPDATE) not in loads
+    states = {(r.table, r.operation): r.state for r in sched.runlog.tables}
+    assert states == {("a", "recreate"): "finished_recreate", ("b", "recreate"): "error",
+                      ("a", "update"): "finished_update"}
+    assert _v_by_k(store, "a") == {k: 3 if k < 2 else 0 for k in range(10)}
+    assert _v_by_k(store, "b") == {k: 0 for k in range(10)}
+
+
+def test_update_count_replaces_append_count(spark):
+    """Results come in declared order with updates last: the update's
+    count replaces its table's append count (``GET /state`` and the
+    etl_sync check read it so)."""
+    from ora_ch_spark.plans.scheduler import TaskScheduler
+    from ora_ch_spark.specs import Operation, TaskSpec
+
+    store = _task_store(spark, "chain_count_")
+    store.write("ch", "f", _kv(spark, 10))
+    srcs = {"src.f": _kv(spark, 13), "stg.f": _kv(spark, 2, v=4), "src.g": _kv(spark, 5)}
+    sched = TaskScheduler(spark, store, source_loader=lambda spec: srcs[spec.source_name])
+    task = TaskSpec(tables=(
+        _upd("f", "stg.f"),
+        _op("f", Operation.APPEND_BY_MAX, "src.f", sync_by_column_max="k"),
+        _op("g", Operation.RECREATE, "src.g"),
+    ), degree=4)
+    res = sched.run_task(task, key_columns={"f": ["k"]})
+    assert list(res.items()) == [("ch.f", 2), ("ch.g", 5)]
+    assert store.row_count("ch", "f") == 13
+
+
+def test_run_task_keeps_callers_scheduler_pool(spark):
+    """Ops run inline on the caller's thread (degree ≤ 3) and restore the
+    caller's scheduler pool instead of clearing it."""
+    from ora_ch_spark.plans.scheduler import TaskScheduler
+    from ora_ch_spark.specs import Operation, TaskSpec
+
+    store = _task_store(spark, "chain_pool_")
+    sched = TaskScheduler(spark, store, source_loader=lambda spec: _kv(spark, 3))
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.scheduler.pool", "p")
+    try:
+        sched.run_task(TaskSpec(tables=(_op("p", Operation.RECREATE, "src.p"),), degree=2))
+        assert sc.getLocalProperty("spark.scheduler.pool") == "p"
+    finally:
+        sc.setLocalProperty("spark.scheduler.pool", None)
+
+
+def test_update_job_count_guard(spark):
+    """One ``op_update`` on a small unpartitioned table: the update set's
+    count and key range come from one probe action, so the whole update
+    runs in at most 8 Spark jobs (10 when they were two actions)."""
+    from ora_ch_spark.operators.load_ops import op_update
+
+    store = _task_store(spark, "upd_jobs_")
+    store.write("ch", "j", _kv(spark, 1000))
+    spec = _upd("j", "stg.j")
+    updates = _kv(spark, 10, v=-1)
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    sc.setJobGroup("upd-jobs", "op_update job count")
+    try:
+        assert op_update(store, spec, updates, ["k"]) == 10
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    bus.waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup("upd-jobs")
+    assert len(jobs) <= 8
+    assert _v_by_k(store, "j") == {k: -1 if k < 10 else 0 for k in range(1000)}
+
+
+def test_chain_schedule_under_thread_stress(spark, monkeypatch):
+    """Degree 12 (11 workers on fewer cores), a short switch interval and
+    a stand-in for the load ops: never more than 11 ops at once, never
+    two on one table, each table's ops in order, every count returned;
+    a failure stops only its own table's chain and is the one raised."""
+    import sys
+    import threading
+    import time
+
+    from ora_ch_spark.plans import scheduler as S
+    from ora_ch_spark.specs import Operation, TaskSpec
+
+    lock = threading.Lock()
+    running: set[str] = set()
+    clashes: list[str] = []
+    peak = [0]
+    done: list[tuple[str, Operation]] = []
+
+    def fake_apply(store, spec, source, key_columns=None):
+        with lock:
+            if spec.full_name in running:
+                clashes.append(spec.full_name)
+            running.add(spec.full_name)
+            peak[0] = max(peak[0], len(running))
+        time.sleep(0.002)
+        with lock:
+            running.discard(spec.full_name)
+            done.append((spec.full_name, spec.operation))
+        if source == "down":
+            raise RuntimeError(f"{spec.full_name} is down")
+        return 1 + len(spec.name) + (spec.operation is Operation.UPDATE)
+
+    class NoTables:
+        def table_exists(self, schema, name):
+            return False
+
+    monkeypatch.setattr(S, "apply_operation", fake_apply)
+    names = [f"t{i:02d}" for i in range(16)]
+    tables = [_op(n, Operation.RECREATE, f"src.{n}") for n in names]
+    tables += [_op(n, Operation.APPEND_BY_MAX, f"src.{n}", sync_by_column_max="k") for n in names]
+    tables += [_upd(n, f"stg.{n}") for n in names[::2]] + [_upd(f"u{i}", "stg.u") for i in range(4)]
+    order = [t for t in tables if t.operation is not Operation.UPDATE]
+    order += [t for t in tables if t.operation is Operation.UPDATE]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        sched = S.TaskScheduler(spark, NoTables(), source_loader=lambda spec: "up")
+        res = sched.run_task(TaskSpec(tables=tuple(tables), degree=12))
+        assert clashes == [] and 1 < peak[0] <= 11
+        for name in {t.full_name for t in tables}:
+            assert [op for n, op in done if n == name] == [
+                t.operation for t in order if t.full_name == name]
+        want = {}
+        for t in order:
+            want[t.full_name] = 1 + len(t.name) + (t.operation is Operation.UPDATE)
+        assert list(res.items()) == list(want.items())
+
+        done.clear()
+        sched.source_loader = lambda spec: "down" if spec.name in ("t03", "t08") else "up"
+        with pytest.raises(RuntimeError, match="ch.t03 is down"):
+            sched.run_task(TaskSpec(tables=tuple(tables), degree=12))
+        assert clashes == []
+        assert [op for n, op in done if n == "ch.t08"] == [Operation.RECREATE]
+        assert [op for n, op in done if n == "ch.t02"] == [
+            Operation.RECREATE, Operation.APPEND_BY_MAX, Operation.UPDATE]
+    finally:
+        sys.setswitchinterval(old)
